@@ -66,17 +66,15 @@ class Catalog:
     def __init__(self, spark: SparkSession, store_dir: str | None = None):
         self.spark = spark
         self._datasets: dict[str, Dataset] = {}
-        self._store_dir = store_dir
-        self._requests: RequestManager | None = None
+        self._requests = (RequestManager(spark, store_dir)
+                          if store_dir is not None else None)
         self._meta_cache: dict[tuple, dict] = {}
 
     @property
     def requests(self) -> RequestManager:
         if self._requests is None:
-            if self._store_dir is None:
-                raise ValueError("async requests need a store_dir "
-                                 "(Catalog(spark, store_dir=...))")
-            self._requests = RequestManager(self.spark, self._store_dir)
+            raise ValueError("async requests need a store_dir "
+                             "(Catalog(spark, store_dir=...))")
         return self._requests
 
     # -- file-driven catalog (reference catalog/catalog.yaml tree) ------------

@@ -157,13 +157,25 @@ def geocode_lon_sql(key: str) -> str:
 # ---------------------------------------------------------------------------
 
 
+def _sig_series(out: np.ndarray) -> pd.Series:
+    """Arrow-backed Series from an (n_rows, width) int matrix (int32 or
+    int64): one ListArray over the flat values instead of n per-row
+    ndarray objects — Spark's Arrow serializer consumes the extension
+    array zero-copy (r6: the list-of-arrays form spent ~40% of the
+    output boundary building and re-converting the row objects; values
+    are bit-identical).  Shared by the minhash/ivfpq/h3/rh-bucket UDFs."""
+    import pyarrow as pa
+    n, width = out.shape
+    offs = pa.array(np.arange(0, (n + 1) * width, width, dtype=np.int32))
+    arr = pa.ListArray.from_arrays(offs, pa.array(out.ravel()))
+    return pd.Series(pd.arrays.ArrowExtensionArray(arr))
+
+
 @pandas_udf(T.ArrayType(T.LongType()))
 def h3_cells_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
     """Packed multi-resolution cell-id array (res 5..9), one Arrow batch at
     a time (SURVEY.md §1.3 `h3_cells array<bigint>`)."""
-    mat = cells.pack_cells(lat.to_numpy(), lon.to_numpy())
-    from geolake_spark.functions.sim import _sig_series
-    return _sig_series(mat)
+    return _sig_series(cells.pack_cells(lat.to_numpy(), lon.to_numpy()))
 
 
 @pandas_udf(T.LongType())

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from geolake_spark.functions.geo import _sig_series
+
 # ---------------------------------------------------------------------------
 # Word shingles (n-grams) — JVM expressions so the DuckDB oracle can mirror
 # ---------------------------------------------------------------------------
@@ -358,20 +360,6 @@ def _simhash_from_token_hashes(hv: np.ndarray, counts: np.ndarray,
             out[i:j][ne] = sig.view(np.int64)
         i = j
     return out
-
-
-def _sig_series(out: np.ndarray) -> pd.Series:
-    """Arrow-backed Series from an (n_rows, width) int matrix (int32 or
-    int64): one ListArray over the flat values instead of n per-row
-    ndarray objects — Spark's Arrow serializer consumes the extension
-    array zero-copy (r6: the list-of-arrays form spent ~40% of the
-    output boundary building and re-converting the row objects; values
-    are bit-identical).  Shared by the minhash/ivfpq/h3/rh-bucket UDFs."""
-    import pyarrow as pa
-    n, width = out.shape
-    offs = pa.array(np.arange(0, (n + 1) * width, width, dtype=np.int32))
-    arr = pa.ListArray.from_arrays(offs, pa.array(out.ravel()))
-    return pd.Series(pd.arrays.ArrowExtensionArray(arr))
 
 
 def make_minhash_udf(num_perm: int = 64, n: int = 3, seed: int = 1):

@@ -247,7 +247,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     their id list materializes (count pre-filter, see _bucket_pairs) — a
     stated recall trade for bounded memory/shuffle at web scale.  Pass a
     ``stats`` dict to get dropped_buckets / dropped_rows accounting, or
-    ``bucket_cap=None`` for exhaustive generation."""
+    ``bucket_cap=None`` for exhaustive generation.  The call runs one Spark
+    job, counting the candidates to decide the broadcast hints below."""
     mh = sim.make_minhash_udf(num_perm=num_perm)
     # Signatures feed the band explode AND the two payload re-joins below;
     # without materialization Spark would re-run the UDF (the dominant
@@ -278,15 +279,22 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # signature tier as the second join's build side and streamed the tiny
     # pair table through it (plan-verified r6).  Hinting the pair side
     # keeps both joins streaming the cached tier map-side — zero exchange
-    # and no tier-sized broadcast.  The hinted side is the candidate set,
-    # which the bucket cap bounds per bucket; for corpora whose TOTAL pair
-    # count outgrows a broadcast, the hint degrades to the planner's
-    # shuffle join (Spark drops unbuildable hints at the 8 GB relation
-    # cap) — same correctness either way.
+    # and no tier-sized broadcast.  Spark does NOT drop a hint it cannot
+    # build: past its broadcast limits the job fails ("Not enough memory
+    # to build and broadcast the table").  So the hints apply only while
+    # the counted candidates, each carrying one signature, fit under
+    # spark.sql.autoBroadcastJoinThreshold; above it the planner chooses
+    # the join strategy — same result either way.
     cand = _bucket_pairs(banded, ["band_id", "band_hash"], cap=bucket_cap,
                          stats=stats)
-    pairs = (F.broadcast(
-        F.broadcast(cand)
+    limit = (df.sparkSession._jsparkSession.sessionState().conf()
+             .autoBroadcastJoinThreshold())
+    # bytes of a candidate carrying one signature as an UnsafeRow: null
+    # bitmap, two ids, array offset + header, the int32 values
+    fits = cand.count() * (48 + 4 * num_perm) <= limit
+    hint = F.broadcast if fits else (lambda d: d)
+    pairs = (hint(
+        hint(cand)
         .join(sigs.select(F.col("id").alias("id_a"),
                           F.col("minhash").alias("mh_a")), "id_a"))
         .join(sigs.select(F.col("id").alias("id_b"),

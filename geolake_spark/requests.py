@@ -1,35 +1,32 @@
 """Async request/job state machine (the reference's flagship UX).
 
-Mirrors the reference's request tracking (PENDING -> RUNNING -> DONE /
-FAILED / TIMEOUT persisted per request, polled via ``GET /requests*`` and
-fetched via ``GET /download/{id}``; /root/reference/datastore/dbmanager/
-dbmanager.py:42-49,102-132 and api/app/main.py:256-357) as a Spark-first
-library component:
+PENDING -> RUNNING -> DONE / FAILED / TIMEOUT per request, polled and
+downloaded as in the reference (dbmanager.py:42-49,102-132; api/app/main.py):
 
-* each request runs in a daemon thread under its own **Spark job group**,
-  so a timeout cancels the actual cluster work
-  (``sparkContext.cancelJobGroup``) — not just the bookkeeping;
-* results are written as parquet snapshots under the store directory and
-  surfaced as ``download_uri`` + ``size_bytes`` (the reference's Download
-  row, dbmanager.py Download model);
-* the request table itself persists as a JSON-lines file so a restarted
-  driver still serves status/download for completed work (the reference
-  keeps it in Postgres; a driver-side file is the library analogue — at
-  cluster scale this would be any shared KV/DB, the state machine is
-  identical).
+* requests queue on one FIFO served by at most ``defaultParallelism`` daemon
+  workers that exit when it empties (the reference bounds in-flight work
+  with broker prefetch, executor/app/main.py:424);
+* each runs under its own Spark job group, so a timeout cancels the cluster
+  work (``cancelJobGroup``); results are written under the store directory;
+* every state change appends one record to ``requests.jsonl``; a restarted
+  driver folds it (last record per id wins) and compacts it once.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 import time
 import traceback
+from collections import deque
 from dataclasses import asdict, dataclass, field
 from enum import Enum
 
 from pyspark.sql import DataFrame, SparkSession
+
+from geolake_spark.sinks import write_result
 
 
 class RequestStatus(str, Enum):
@@ -76,59 +73,65 @@ class Request:
         return self._human(self.size_bytes)
 
 
-class RequestManager:
-    """Submit, track, time out and download query jobs.
+_LIVE = (RequestStatus.PENDING.value, RequestStatus.RUNNING.value)
 
-    ``submit`` takes a zero-arg callable returning a DataFrame (built lazily
-    by the caller — Catalog.execute/run_workflow plans), returns the request
-    id immediately and materializes the result in the background.
-    """
+
+class RequestManager:
+    """Submit, track, time out and download query jobs.  ``submit`` takes a
+    zero-arg callable returning a DataFrame (Catalog.execute/run_workflow
+    plans), returns the id at once and a worker materializes the result."""
 
     def __init__(self, spark: SparkSession, store_dir: str):
         self.spark = spark
         self.store_dir = store_dir
         os.makedirs(store_dir, exist_ok=True)
         self._lock = threading.Lock()
+        self._changed = threading.Condition(self._lock)
         self._requests: dict[int, Request] = {}
-        self._threads: dict[int, threading.Thread] = {}
-        self._next_id = 1
+        self._queue: deque[tuple] = deque()
+        self._workers = 0
+        self._max_workers = spark.sparkContext.defaultParallelism
+        self._store_file = os.path.join(store_dir, "requests.jsonl")
         self._load()
 
     # -- persistence ----------------------------------------------------------
 
-    @property
-    def _store_file(self) -> str:
-        return os.path.join(self.store_dir, "requests.jsonl")
-
     def _load(self) -> None:
-        if not os.path.exists(self._store_file):
-            return
-        with open(self._store_file) as f:
-            for line in f:
-                if line.strip():
-                    r = Request(**json.loads(line))
-                    # a restart orphans in-flight work: surface it as FAILED
-                    if r.status in (RequestStatus.PENDING.value,
-                                    RequestStatus.RUNNING.value):
-                        r.status = RequestStatus.FAILED.value
-                        r.fail_reason = "driver restarted mid-request"
-                    self._requests[r.request_id] = r
-        if self._requests:
-            self._next_id = max(self._requests) + 1
-
-    def _flush(self) -> None:
+        lines = []
+        if os.path.exists(self._store_file):
+            with open(self._store_file) as f:
+                lines = [ln for ln in f.read().splitlines() if ln.strip()]
+        for i, line in enumerate(lines):
+            try:
+                r = Request(**json.loads(line))
+            except json.JSONDecodeError:
+                if i < len(lines) - 1:
+                    raise
+                break  # the final append was torn by a crash
+            # a restart orphans in-flight work: surface it as FAILED
+            if r.status in _LIVE:
+                r.status = RequestStatus.FAILED.value
+                r.fail_reason = "driver restarted mid-request"
+            self._requests[r.request_id] = r  # the last record per id wins
+        self._next_id = max(self._requests, default=0) + 1
         tmp = self._store_file + ".tmp"
         with open(tmp, "w") as f:
-            for r in self._requests.values():
-                f.write(json.dumps(asdict(r)) + "\n")
+            f.writelines(json.dumps(asdict(r)) + "\n"
+                         for r in self._requests.values())
         os.replace(tmp, self._store_file)
 
+    def _append(self, req: Request) -> None:
+        with open(self._store_file, "a") as f:
+            f.write(json.dumps(asdict(req)) + "\n")
+
     def _update(self, req: Request, **kw) -> None:
+        """The single state transition: apply, wake waiters, log."""
         with self._lock:
             for k, v in kw.items():
                 setattr(req, k, v)
             req.last_update = time.time()
-            self._flush()
+            self._changed.notify_all()
+            self._append(req)
 
     # -- submission -----------------------------------------------------------
 
@@ -137,9 +140,9 @@ class RequestManager:
                estimate_size_bytes: int | None = None,
                timeout_s: float | None = None,
                result_format: str | None = None) -> int:
-        """Run ``plan()`` (-> DataFrame) in the background; returns the id.
+        """Queue ``plan()`` (-> DataFrame) for a worker; returns the id.
 
-        The thread tags its Spark jobs with group ``geolake-req-<id>``; on
+        The worker tags its Spark jobs with group ``geolake-req-<id>``; on
         timeout a timer cancels that job group, which aborts the running
         stages cluster-wide and fails the write.  ``result_format`` routes
         the sink (parquet | json | geojson — sinks.write_result)."""
@@ -150,66 +153,71 @@ class RequestManager:
                           query=query, user_id=user_id,
                           estimate_size_bytes=estimate_size_bytes)
             self._requests[rid] = req
-            self._flush()
+            self._append(req)
+            self._queue.append((req, plan, timeout_s, result_format))
+            if self._workers < self._max_workers:
+                self._workers += 1
+                threading.Thread(target=self._work, daemon=True).start()
+        return rid
+
+    def _work(self) -> None:
+        while True:
+            with self._lock:
+                if not self._queue:
+                    self._workers -= 1
+                    return
+                job = self._queue.popleft()
+            try:
+                self._run(*job)
+            except Exception:  # noqa: BLE001 — unwritable log; serve on
+                traceback.print_exc()
+
+    def _run(self, req: Request, plan, timeout_s: float | None,
+             result_format: str | None) -> None:
+        rid = req.request_id
         group = f"geolake-req-{rid}"
-        timed_out = threading.Event()
-
-        def cancel():
-            timed_out.set()
-            self.spark.sparkContext.cancelJobGroup(group)
-
-        timer = threading.Timer(timeout_s, cancel) if timeout_s else None
-
-        def run():
-            out_path = os.path.join(self.store_dir, f"request-{rid}")
+        threading.current_thread().name = group
+        sc = self.spark.sparkContext
+        timer = (threading.Timer(timeout_s, sc.cancelJobGroup, [group])
+                 if timeout_s else None)
+        t0 = time.monotonic()
+        try:
             try:
                 self._update(req, status=RequestStatus.RUNNING.value)
-                self.spark.sparkContext.setJobGroup(
-                    group, f"request {rid} ({dataset}/{product})",
-                    interruptOnCancel=True)
+                sc.setJobGroup(group, f"request {rid} ({req.dataset}/"
+                               f"{req.product})", interruptOnCancel=True)
                 if timer:
                     timer.start()
                 df = plan()
                 if not isinstance(df, DataFrame):
                     raise TypeError("plan() must return a DataFrame")
-                from geolake_spark.sinks import write_result
-                write_result(df, out_path, result_format)
-                size = sum(os.path.getsize(os.path.join(dp, fn))
-                           for dp, _, fns in os.walk(out_path) for fn in fns)
-                self._update(req, status=RequestStatus.DONE.value,
-                             download_uri=out_path, size_bytes=size)
-            except Exception as exc:  # noqa: BLE001 — job boundary
-                if timed_out.is_set():
-                    self._update(req, status=RequestStatus.TIMEOUT.value,
-                                 fail_reason=f"timed out after {timeout_s}s")
-                else:
-                    self._update(req, status=RequestStatus.FAILED.value,
-                                 fail_reason="".join(
-                                     traceback.format_exception_only(exc))
-                                 .strip()[:1000])
+                out = os.path.join(self.store_dir, f"request-{rid}")
+                write_result(df, out, result_format)
+                final = {"status": RequestStatus.DONE.value, "download_uri": out,
+                         "size_bytes": sum(os.path.getsize(os.path.join(d, fn))
+                                           for d, _, fns in os.walk(out)
+                                           for fn in fns)}
             finally:
                 if timer:
                     timer.cancel()
-                # this worker thread dies right after: release any dedup
-                # tiers the plan persisted under it (the result is already
-                # written to disk, nothing re-reads the plan), otherwise
-                # they'd only be reclaimed by a later dead-thread sweep
-                from geolake_spark.operators.dedup import release_caches
-                release_caches()
-                # PySpark 4 removed SparkContext.clearJobGroup — calling it
-                # raised AttributeError in every worker thread's finally
-                # (harmless to the state machine, but each request ended in
-                # a stack trace).  Clearing the thread-local job properties
-                # is the supported equivalent (null removes the property).
-                sc = self.spark.sparkContext
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-                sc.setLocalProperty("spark.job.interruptOnCancel", None)
-
-        t = threading.Thread(target=run, name=group, daemon=True)
-        self._threads[rid] = t
-        t.start()
-        return rid
+                # the worker outlives the request, so no dead-thread sweep
+                # frees its dedup tiers; none exist if dedup never loaded
+                dedup = sys.modules.get("geolake_spark.operators.dedup")
+                if dedup is not None:
+                    dedup.release_caches()
+                # PySpark 4 has no clearJobGroup; None drops the property
+                for prop in ("spark.jobGroup.id", "spark.job.description",
+                             "spark.job.interruptOnCancel"):
+                    sc.setLocalProperty(prop, None)
+        except Exception as exc:  # noqa: BLE001 — job boundary: serve on
+            if timer and time.monotonic() - t0 >= timeout_s:  # timer fired
+                final = {"status": RequestStatus.TIMEOUT.value,
+                         "fail_reason": f"timed out after {timeout_s}s"}
+            else:
+                final = {"status": RequestStatus.FAILED.value,
+                         "fail_reason": "".join(traceback.format_exception_only(
+                             exc)).strip()[:1000]}
+        self._update(req, **final)
 
     # -- polling / download (api/app/main.py:256-357) --------------------------
 
@@ -229,17 +237,12 @@ class RequestManager:
         return self._requests[request_id].size_bytes
 
     def download(self, request_id: int, as_zip: bool | None = None) -> str:
-        """Result location for a DONE request (GET /download/{id});
-        raises for any other state — mirrors the 404 path.
-
-        ``as_zip=None`` (the default) mirrors the reference executor's
-        behavior exactly: a result with MORE than one data file is packaged
-        into ONE zip artifact, a single-file result is returned bare
-        (executor/app/main.py:186-195 zips iff len(paths) > 1).  Bookkeeping
-        files (``_SUCCESS``, dotfiles) don't count toward the threshold but
-        ARE included in the zip so the directory round-trips.  Explicit
-        ``True``/``False`` forces either form; the zip is built once and
-        cached next to the result."""
+        """Result location for a DONE request (GET /download/{id}); raises
+        for any other state (the 404 path).  ``as_zip=None`` zips a result
+        with more than one data file, as the reference executor does
+        (executor/app/main.py:186-195); ``_SUCCESS`` and dotfiles do not
+        count but are zipped too.  ``True``/``False`` force either form;
+        the zip is built once and cached next to the result."""
         r = self._requests[request_id]
         if r.status != RequestStatus.DONE.value or not r.download_uri:
             raise FileNotFoundError(
@@ -263,14 +266,11 @@ class RequestManager:
             os.replace(tmp, zpath)
         return zpath
 
-    def wait(self, request_id: int, timeout_s: float = 300.0,
-             poll_s: float = 0.05) -> str:
+    def wait(self, request_id: int, timeout_s: float = 300.0) -> str:
         """Block until the request leaves PENDING/RUNNING; returns status."""
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            st, _ = self.get_request_status(request_id)
-            if st not in (RequestStatus.PENDING.value,
-                          RequestStatus.RUNNING.value):
-                return st
-            time.sleep(poll_s)
-        raise TimeoutError(f"request {request_id} still running")
+        req = self._requests[request_id]
+        with self._changed:
+            if not self._changed.wait_for(lambda: req.status not in _LIVE,
+                                          timeout_s):
+                raise TimeoutError(f"request {request_id} still running")
+            return req.status

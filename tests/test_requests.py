@@ -100,23 +100,105 @@ def test_download_auto_zip_default(catalog, spark, tmp_path):
     assert spark.read.parquet(bare).count() == 5
 
 
-def test_request_worker_thread_exits_clean(catalog):
+def test_request_worker_thread_exits_clean(catalog, spark):
     """PySpark 4 removed SparkContext.clearJobGroup; until round 4 every
     request worker thread died with AttributeError in its finally block
-    (the state machine survived, masking it).  Assert the worker thread
-    raises nothing at all."""
+    (the state machine survived, masking it).  Assert that no worker raises,
+    also past a failing plan, and that the next request is still served."""
     import threading
 
     seen = []
     orig = threading.excepthook
     threading.excepthook = lambda a: seen.append(a)
     try:
+        rm = catalog.requests
         rid = catalog.submit_execute("web", "pages", {"filters": {"lang": "en"}})
-        assert catalog.requests.wait(rid, timeout_s=120) == RequestStatus.DONE.value
-        catalog.requests._threads[rid].join(timeout=30)
+        assert rm.wait(rid, timeout_s=120) == RequestStatus.DONE.value
+        bad = rm.submit(lambda: 1 / 0, "web", "pages")
+        assert rm.wait(bad, timeout_s=60) == RequestStatus.FAILED.value
+        nxt = rm.submit(lambda: spark.range(3), "web", "pages")
+        assert rm.wait(nxt, timeout_s=60) == RequestStatus.DONE.value
     finally:
         threading.excepthook = orig
     assert not seen, f"request worker raised: {seen}"
+
+
+def test_request_workers_bounded(catalog, spark):
+    """4 x N requests submitted at once all finish with unique ids on at
+    most N = defaultParallelism live ``geolake-req-*`` workers, and an
+    idle manager keeps no worker alive."""
+    import threading
+
+    def workers():
+        return sum(t.name.startswith("geolake-req-")
+                   for t in threading.enumerate())
+
+    n = spark.sparkContext.defaultParallelism
+    live = []
+
+    def plan():
+        live.append(workers())
+        return spark.range(10)
+
+    rm = catalog.requests
+    rids = [rm.submit(plan, "web", "pages") for _ in range(4 * n)]
+    assert len(set(rids)) == 4 * n
+    assert all(rm.wait(r, timeout_s=300) == RequestStatus.DONE.value
+               for r in rids)
+    assert len(live) == 4 * n and max(live) <= n, live
+    deadline = time.monotonic() + 30
+    while workers() and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert workers() == 0
+
+
+def test_catalog_requests_one_manager_under_concurrency(spark, tmp_path):
+    """Concurrent first readers of ``Catalog.requests`` share one manager
+    (two managers would hand out clashing request ids)."""
+    import threading
+
+    cat = Catalog(spark, store_dir=str(tmp_path / "store"))
+    barrier = threading.Barrier(8)
+    got = []
+
+    def read():
+        barrier.wait(timeout=30)
+        got.append(cat.requests)
+
+    threads = [threading.Thread(target=read) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+        assert not t.is_alive()
+    assert len(got) == 8 and all(m is got[0] for m in got)
+
+
+def test_request_leaves_corpus_modules_unloaded(catalog, monkeypatch):
+    """The geo control plane does not load the corpus stack: a finished
+    request leaves ``operators.dedup`` unimported, and importing the API
+    and the geo functions (running the h3 cell UDF body too) loads none
+    of the corpus modules."""
+    import subprocess
+    import sys
+
+    monkeypatch.delitem(sys.modules, "geolake_spark.operators.dedup",
+                        raising=False)
+    rid = catalog.submit_execute("web", "pages", {"filters": {"lang": "en"}})
+    assert catalog.requests.wait(rid, timeout_s=120) == RequestStatus.DONE.value
+    assert "geolake_spark.operators.dedup" not in sys.modules
+    corpus = ["geolake_spark.operators.dedup", "geolake_spark.functions.sim",
+              "geolake_spark.functions.text", "geolake_spark.pipeline"]
+    code = ("import sys\n"
+            "import pandas as pd\n"
+            "import geolake_spark.api\n"
+            "from geolake_spark.functions import geo\n"
+            "geo.h3_cells_udf.func(pd.Series([45.0]), pd.Series([7.0]))\n"
+            f"print([m for m in {corpus!r} if m in sys.modules])\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
+                         capture_output=True, text=True, timeout=120)
+    assert out.stdout.strip() == "[]", out.stdout + out.stderr
 
 
 def test_request_failure_reason(catalog):
@@ -152,11 +234,27 @@ def test_request_timeout_cancels_job_group(catalog, spark, synth_paths):
 
 
 def test_request_store_survives_restart(catalog, spark):
+    """The store is an append-only log, one full record per transition; a
+    restart folds it (last record per id wins), skips a torn final line,
+    fails orphaned in-flight work and compacts the file once."""
     rid = catalog.submit_execute("web", "pages", {"filters": {"lang": "en"}})
     catalog.requests.wait(rid, timeout_s=120)
+    store = os.path.join(catalog.requests.store_dir, "requests.jsonl")
+    with open(store) as f:
+        log = [json.loads(line) for line in f]
+    assert [r["status"] for r in log] == ["PENDING", "RUNNING", "DONE"]
+    orphan = dict(log[1], request_id=rid + 1)  # a RUNNING record
+    with open(store, "a") as f:
+        f.write(json.dumps(orphan) + "\n")
+        f.write(json.dumps(dict(log[0], request_id=rid + 2))[:40])  # torn
     reloaded = RequestManager(spark, catalog.requests.store_dir)
     assert reloaded.get_request_status(rid)[0] == RequestStatus.DONE.value
     assert os.path.exists(reloaded.download(rid))
+    assert reloaded.get_request_status(rid + 1) == (
+        RequestStatus.FAILED.value, "driver restarted mid-request")
+    assert [r.request_id for r in reloaded.get_requests()] == [rid, rid + 1]
+    with open(store) as f:
+        assert [json.loads(line)["request_id"] for line in f] == [rid, rid + 1]
 
 
 def test_format_sinks(catalog, spark, tmp_path):
